@@ -16,12 +16,10 @@ package graft
   *    are only skipped when the deadline hits between its reps — flagged
   *    per-query as "warm":false).
   *
+  * Every query pays its full declared lineage: no result is shared between
+  * queries or reps (`catalog.clearCache()` runs between reps).
+  *
   * Round 11 additions:
-  *  - GRAPH-FAMILY PREFIX SHARING: Bench sets -Dgraft.bench.sharePrefix=1
-  *    so d128/d130 reuse one simhash pair build and d73/d95 one jaccard
-  *    pair build (SparkEntry.sharedPrefix) — the r10 deadline was consumed
-  *    by exactly this family rebuilding identical prefixes. The artifact's
-  *    "share_prefix" flag marks the mode; correctness runs never share.
   *  - VARIANCE GUARD (interleaved since round 13 — the round-12 header
   *    described this design but the code still drained only after the
   *    schedule; r13 implemented it): any query whose min
@@ -141,7 +139,7 @@ package graft
   *  - REP-1 CENSOR BUDGET: rep 1 is boxed too, at the wider
   *    max(ratio × prior, 3 × floor) + 10 s allowance (one-time builds fit;
   *    a 91 s storm rep on a 5 s prior dies at ~25 s). The r18 exemption is
-  *    gone for every query, shared-prefix members included.
+  *    gone for every query.
   *  - ROTATION CAP + WARMUP FIRST: at most 3 starved queries rotate to the
   *    front (largest priors), and the cheapest-prior query is promoted
   *    ahead of the rotated block so session init/JIT lands in its rep-set,
@@ -149,10 +147,6 @@ package graft
   *  - CENSOR CLASSIFICATION: only a Spark job-CANCELLATION exception
   *    counts as a censored rep — a genuine failure thrown after the budget
   *    expired lands in `failed` (r18 ADVICE).
-  *  - SHARE MEMBERS NAMED: the artifact's `share_members` array lists the
-  *    queries whose warm mins exclude a shared prefix build (the r11 graph
-  *    family d73/d95/d128/d130). The r18-added p91/s166 shares were
-  *    REMOVED (r18 verdict #2): both queries now measure full lineage.
   *
   * The stdout line is a COMPACT summary (total, counts, slowest-10) —
   * the full 141-query line exceeded the driver's ~2.2 KB stdout-tail
@@ -400,19 +394,15 @@ private[graft] object BenchUtil {
 
   /** REP-1 censor budget (round 19, r18 verdict #1a): rep 1 was EXEMPT from
     * the censor entirely (the r18 review fix protecting legitimate one-time
-    * builds — p91's corpus pass, q155's Derby boot, q154's layout write,
-    * the shared-prefix priming rep), and that exemption is exactly how
-    * d128's 91.3 s storm rep ran uncensored and consumed a fifth of the
-    * r18 driver deadline. Rep 1 now gets a budget too, just WIDER: the
+    * builds — p91's corpus pass, q155's Derby boot, q154's layout write),
+    * and that exemption is exactly how d128's 91.3 s storm rep ran
+    * uncensored and consumed a fifth of the r18 driver deadline. Rep 1 now gets a budget too, just WIDER: the
     * floor is tripled (a one-time build on a sub-second-prior query gets
     * ≥ 6 s) and a flat `allowS` (default 10 s) absorbs first-run JIT and
     * any residual init — so q154's ~3.4 s layout-build rep 1 against its
     * 0.05 s prior fits a ~16 s budget with 4× headroom, while a d128-class
-    * storm rep on a ~5 s prior dies at ~25 s instead of never. The
-    * shared-prefix queries get the same budget: a healthy prefix-priming
-    * rep (prefix build + iterations ≈ 8-10 s at sf0.1) fits it, and a
-    * STORMY one is precisely what must be censored — the uncensored
-    * fresh-window requeue re-pays the build honestly. */
+    * storm rep on a ~5 s prior dies at ~25 s instead of never, and the
+    * uncensored fresh-window requeue re-pays the build honestly. */
   def rep1CensorBudgetS(prior: Option[Double], censorRatio: Double,
                         floorS: Double, allowS: Double,
                         crossHost: Boolean): Option[Double] =
@@ -592,10 +582,6 @@ object Bench {
     // every rep carried ≥ watchJitMs of JIT, one extra warm rep is granted
     val watchRatio = sys.env.getOrElse("SPARK_GRAFT_BENCH_WATCH_RATIO", "1.75").toDouble
     val watchJitMs = sys.env.getOrElse("SPARK_GRAFT_BENCH_WATCH_JIT_MS", "2000").toLong
-    // graph-family prefix sharing (see SparkEntry.sharedPrefix); opt out
-    // with SPARK_GRAFT_SHARE_PREFIX=0 to measure full per-query lineage
-    val sharePrefix = sys.env.getOrElse("SPARK_GRAFT_SHARE_PREFIX", "1") == "1"
-    if (sharePrefix) System.setProperty("graft.bench.sharePrefix", "1")
     // the library's own session factory (incl. the scale-aware AQE knobs):
     // the bench must measure the configuration users actually run
     val spark = core.Engine.session(s"local[$cpus]", cpus.toInt)
@@ -813,16 +799,8 @@ object Bench {
       val serveTierJson = queryList.map(_._1)
         .filter(n => serveCutoff > 0 && judgePrior.get(n).exists(_ <= serveCutoff))
         .map("\"" + _ + "\"").mkString("[", ",", "]")
-      // the prefix-sharing members, named (round 19, r18 ADVICE): a
-      // consumer must read THESE mins as post-prefix iteration cost; the
-      // bare share_prefix boolean never said which queries shared
-      val shareMembersJson =
-        (if (sharePrefix) SparkEntry.sharedPrefixQueries.toSeq.sorted
-         else Seq.empty[String])
-          .filter(n => queryList.exists(_._1 == n))
-          .map(jstr).mkString("[", ",", "]")
       val art =
-        s"""{"sf":${jstr(sfDir)},"host":${jstr(host)},"hostname":${jstr(hostName)},"cpus":$cpus,"scheduling":"query-major","order_source":${jstr(orderSource)},"prior_host":${jstr(priorHost)},"prior_hostname":${jstr(priorHostName)},"reps":$reps,"planned_reps":$plannedReps,"eff_reps":$effReps,"degraded_at_s":${degradedAtS.map(fmt).getOrElse("null")},"reserve_s":${fmt(reserveS)},"fat_cutoff_s":${fmt(fatCutoff)},"serve_cutoff_s":${fmt(serveCutoff)},"serve_tier":$serveTierJson,"deadline_s":${fmt(deadlineS)},"deadline_hit":$deadlineHit,"complete":$done,"share_prefix":$sharePrefix,"share_members":$shareMembersJson,"wall_s":${fmt(elapsed)},"jit_ms":${jitMs - jit0},"gc_ms":${gcMs - gc0},"total_min":$totalJson,"n_queries":${mins.size},"n_warm":$nWarm,"failed":$failedJson,"skipped":$skippedJson,"requeued":$requeuedJson,"guard_skipped":$guardSkippedJson,"watch":$watchJson,"watch_reran":$watchReranJson,"watch_rep_failed":$watchRepFailedJson,"censored":$censoredJson,"queries":$detail}"""
+        s"""{"sf":${jstr(sfDir)},"host":${jstr(host)},"hostname":${jstr(hostName)},"cpus":$cpus,"scheduling":"query-major","order_source":${jstr(orderSource)},"prior_host":${jstr(priorHost)},"prior_hostname":${jstr(priorHostName)},"reps":$reps,"planned_reps":$plannedReps,"eff_reps":$effReps,"degraded_at_s":${degradedAtS.map(fmt).getOrElse("null")},"reserve_s":${fmt(reserveS)},"fat_cutoff_s":${fmt(fatCutoff)},"serve_cutoff_s":${fmt(serveCutoff)},"serve_tier":$serveTierJson,"deadline_s":${fmt(deadlineS)},"deadline_hit":$deadlineHit,"complete":$done,"wall_s":${fmt(elapsed)},"jit_ms":${jitMs - jit0},"gc_ms":${gcMs - gc0},"total_min":$totalJson,"n_queries":${mins.size},"n_warm":$nWarm,"failed":$failedJson,"skipped":$skippedJson,"requeued":$requeuedJson,"guard_skipped":$guardSkippedJson,"watch":$watchJson,"watch_reran":$watchReranJson,"watch_rep_failed":$watchRepFailedJson,"censored":$censoredJson,"queries":$detail}"""
       val out = java.nio.file.Paths.get(artifact)
       Option(out.getParent).foreach(java.nio.file.Files.createDirectories(_))
       java.nio.file.Files.write(out, (art + "\n").getBytes("UTF-8"))
@@ -895,10 +873,10 @@ object Bench {
           // Rep 1 is censored at the WIDER rep-1 budget (round 19, r18
           // verdict #1a — the r18 full exemption let d128's 91.3 s storm
           // rep run to completion): one-time builds (q154's layout write,
-          // q155's Derby boot, a shared-prefix priming rep) fit the
-          // tripled floor + 10 s allowance; a storm rep dies at ~25 s on
-          // a 5 s prior instead of never, and the uncensored fresh-window
-          // requeue re-pays any wasted build honestly.
+          // q155's Derby boot) fit the tripled floor + 10 s allowance; a
+          // storm rep dies at ~25 s on a 5 s prior instead of never, and
+          // the uncensored fresh-window requeue re-pays any wasted build
+          // honestly.
           val repBudgetS = if (rep == 1) rep1BudgetS else budgetS
           val watchdog = repBudgetS.map { b =>
             censorExec.schedule(new Runnable {

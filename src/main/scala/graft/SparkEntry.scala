@@ -112,52 +112,17 @@ object SparkEntry {
     s.catalog.dropTempView(name): Unit
   }
 
-  /** Bench-only graph-family prefix sharing. d128 and d130 build the
-    * IDENTICAL simhash pair graph; d73 and d95 the identical jaccard pair
-    * graph — four queries, two pair builds. Under
-    * `-Dgraft.bench.sharePrefix=1` (set ONLY by Bench.main) each prefix is
-    * computed once per (session, sfDir) and `localCheckpoint`ed so the
-    * sibling query and reps 2+ reuse it: localCheckpoint persists at RDD
-    * level, surviving the `catalog.clearCache()` Bench issues between reps.
-    * Correctness runs (Verify / the driver / sbt test) never set the flag,
-    * so every query there builds its own full lineage. Results are
-    * identical either way — the prefix is deterministic and sharing only
-    * moves WHERE the build cost is paid (the first toucher's first rep);
-    * the bench artifact records `share_prefix` so warm mins for these four
-    * queries are read as post-prefix iteration cost. */
-  private val prefixMemo =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String, String), DataFrame]
-  private def sharedPrefix(s: SparkSession, dir: String, key: String)
-                          (build: => DataFrame): DataFrame =
-    if (!sys.props.get("graft.bench.sharePrefix").contains("1")) build
-    else prefixMemo.getOrElseUpdate((s, dir, key), build.localCheckpoint())
-
-  /** d128/d130 shared prefix: simhash near-dup pair graph (d24 semantics). */
+  /** Simhash near-dup pair graph (d24 semantics), built by d128 and d130. */
   private def simhashPairGraph(s: SparkSession, dir: String): DataFrame =
-    sharedPrefix(s, dir, "simhash_pairs") {
-      Dedup.simHashPairs(Dedup.simHash(t(s, dir, "documents"), "doc_id", "text"),
-        maxDist = 3)
-    }
+    Dedup.simHashPairs(Dedup.simHash(t(s, dir, "documents"), "doc_id", "text"),
+      maxDist = 3)
 
-  /** d73/d95 shared prefix: 3-gram Jaccard ≥ 0.8 pair graph (d22 semantics,
-    * uncapped — both call sites pass no maxShingleDf). */
+  /** 3-gram Jaccard ≥ 0.8 pair graph (d22 semantics, uncapped), built by
+    * d73, d95, d172 and d173. */
   private def jaccardPairGraph(s: SparkSession, dir: String): DataFrame =
-    sharedPrefix(s, dir, "jaccard_pairs") {
-      Dedup.jaccardPairs(t(s, dir, "documents"), "doc_id", "text",
-          n = 3, threshold = 0.8)
-        .select(col("id_a"), col("id_b"))
-    }
-
-  /** d95 shared prefix, one stage deeper: the component map over the
-    * jaccard pair graph — the SAME CC d73 computes. d73 deliberately stays
-    * on the raw pair prefix (so every bench round still measures a WARM
-    * iterative-CC run there); d95 consumes the component map directly and
-    * its warm min reads as the priority-dedup logic alone. Outside bench
-    * mode this is just d95's own full lineage. */
-  private def jaccardCcGraph(s: SparkSession, dir: String): DataFrame =
-    sharedPrefix(s, dir, "jaccard_cc") {
-      Dedup.connectedComponents(jaccardPairGraph(s, dir), "id_a", "id_b")
-    }
+    Dedup.jaccardPairs(t(s, dir, "documents"), "doc_id", "text",
+        n = 3, threshold = 0.8)
+      .select(col("id_a"), col("id_b"))
 
   /** The p90/p91 composed-corpus pass through near-dup cluster dedup
     * (exact dedup → quality floor → boilerplate span prune → LSH pair
@@ -196,20 +161,6 @@ object SparkEntry {
       .select(col("id_a"), col("id_b"))
     Dedup.dedupByClusters(pruned, pairs, "doc_id")
   }
-
-  /** The bench-mode prefix-sharing MEMBER SET, exported so the bench
-    * artifact can NAME which queries' warm mins exclude a shared build
-    * (r18 verdict #2 / ADVICE: a bare `share_prefix` boolean left
-    * consumers unable to tell which mins to read as post-prefix cost).
-    * Exactly the r11 graph family: d128/d130 share one simhash pair
-    * build, d73/d95 one jaccard pair build (d95 one CC stage deeper).
-    * The r18-added p91/s166 shares were REMOVED this round (r18 verdict
-    * #2: neither was deadline-necessary and their published mins
-    * understated the queries' declared work) — p91 and s166 now always
-    * build their full lineage, in bench mode too. */
-  val sharedPrefixQueries: Set[String] =
-    Set("d73_dup_clusters", "d95_priority_dedup",
-      "d128_pagerank", "d130_cluster_split")
 
   /** Exact long cents of a 2-dp double. The true value is an integer k of
     * cents, the double is within ±ε of k/100, and floor(k + 0.5 ± ε) = k for
@@ -1386,7 +1337,8 @@ object SparkEntry {
     // "which copy survives" policy every multi-source corpus merge needs
     "d95_priority_dedup" -> ((s, dir) => {
       val docs = t(s, dir, "documents")
-      Dedup.dedupByClustersPriorityCc(docs, jaccardCcGraph(s, dir), "doc_id",
+      val cc = Dedup.connectedComponents(jaccardPairGraph(s, dir), "id_a", "id_b")
+      Dedup.dedupByClustersPriorityCc(docs, cc, "doc_id",
           priority = substring(col("source"), 4, 10).cast("int"))
         .select(col("doc_id"), col("source"), col("lang"))
         .orderBy(col("doc_id"))
@@ -1591,8 +1543,6 @@ object SparkEntry {
     // Every stage is also separately oracle-verified (d21/t63/d87/d23/d73/
     // d81); this row proves their COMPOSITION is, too
     "p90_composed_corpus" -> ((s, dir) => {
-      // full lineage on purpose, never the shared prefix: p90 is where the
-      // bench measures the corpus pass itself (p91 builds it too)
       val deduped = composedDedupedBuild(s, dir)
       graft.ops.Sampling.temperatureBalance(deduped, "lang", "doc_id")
         .groupBy(col("lang")).agg(count(lit(1)).as("n_docs"))
@@ -2827,7 +2777,7 @@ object SparkEntry {
     }),
 
     // TRIANGLE / clustering-coefficient diagnostic (round 17) over the
-    // near-dup pair graph (the d73/d95 shared prefix): coefficient → 1
+    // near-dup pair graph d73 and d95 also build: coefficient → 1
     // marks a doc whose near-dups are all near-dups of EACH OTHER (a true
     // template/duplicate clique — safe to collapse), → 0 marks transitive
     // chains where CC merged docs that never matched directly (the
@@ -2857,11 +2807,11 @@ object SparkEntry {
     // d73's near-dup components — keep every duplicate, downweight it so
     // a doc duplicated k times carries ~one doc of gradient mass
     // (duplication often correlates with quality; dropping loses signal a
-    // weight keeps). Consumes the d95 shared component-map prefix, so the
-    // warm bench min reads as the weighting logic alone
+    // weight keeps). Builds the same component map as d95
     "d172_dup_weights" -> ((s, dir) => {
-      graft.ops.Sampling.clusterWeights(t(s, dir, "documents"),
-          jaccardCcGraph(s, dir), "doc_id", "node", "component")
+      val cc = Dedup.connectedComponents(jaccardPairGraph(s, dir), "id_a", "id_b")
+      graft.ops.Sampling.clusterWeights(t(s, dir, "documents"), cc,
+          "doc_id", "node", "component")
         .orderBy(col("doc_id"))
     }),
 
@@ -2895,29 +2845,6 @@ object SparkEntry {
     * SPARK_GRAFT_QUERIES, never part of the driver correctness surface
     * (`queries`/`oracleSql`) — so they don't perturb the round-over-round
     * shared-query bench comparison either.
-    *  - x23_minhash_lsh_inrow: d23 with `pairJoin = false` — the measured
-    *    alternative candidate-pair shape (in-row bucket-list expansion);
-    *    committed evidence that the streamed equi-join default is a timing
-    *    wash at d23's bucket sizes (within ±20% across sf0.1 and 10× runs,
-    *    each shape winning some) while staying bounded on degenerate
-    *    buckets.
-    *  - x22_jaccard_inrow: d22 with `pairJoin = false` — the legacy in-row
-    *    pair expansion (per-shingle collect_list + interpreted k² lambda),
-    *    kept for head-to-head evidence against the streamed equi-join
-    *    default that replaced it in r7.
-    *  - x74_neardup_fixed: d74 with `planes` pinned at 4 instead of
-    *    `autoPlanes` — since r8 the driver query ships the auto contract
-    *    (planes tracks log₂ n, near-linear candidates), and this is the
-    *    fixed-knob alternative kept for head-to-head stress evidence (at
-    *    10× it went 17.5× superlinear from per-bucket densification).
-    *    At the sf0.01 gate n=500 ⇒ autoPlanes=4, so both forms coincide
-    *    there — the split only shows at stress scale.
-    *  - x25_jaccard_uncapped: d22 with `maxShingleDf = 0` — the exact
-    *    uncapped form (every boilerplate shingle keeps its full k² pair
-    *    fan-out), kept for head-to-head evidence against the capped driver
-    *    default that replaced it in r8.
-    *  - x92_semantic_dedup_fixed: p92 at planes=4, the fixed-knob
-    *    alternative of the now-auto driver query (same rationale as x74).
     *  - x97_bpe_train64: the full 64-merge BPE training loop (batched
     *    top-k extraction + vocab pruning) — the end-to-end cost t97's
     *    single pair-count statistic doesn't show.
@@ -2932,76 +2859,6 @@ object SparkEntry {
     *    equality + tight-expand recall floor) and s120's hash-exact
     *    oracle stays as is. */
   def benchOnlyQueries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    // t144 decomposition probes (r17 — the confirmed 1.75× riser): the
-    // three stages measured alone, to localize the floor shift
-    "x144_under_only" -> ((s, dir) => {
-      val d = t(s, dir, "documents")
-      graft.ops.TextIndex.bigramLogProbScoreUnder(d,
-        d.filter(col("lang") === "en"), "doc_id", "text", 0.5)
-    }),
-    "x144_corpus_only" -> ((s, dir) => {
-      graft.ops.TextIndex.bigramLogProbScore(t(s, dir, "documents"),
-        "doc_id", "text", 0.5)
-    }),
-    // the pre-r17 two-call composition, kept as the measured control for
-    // the fused dsirResample (identical numbers by construction)
-    "x144_twocall" -> ((s, dir) => {
-      val d = t(s, dir, "documents")
-      val underTarget = graft.ops.TextIndex.bigramLogProbScoreUnder(
-          d, d.filter(col("lang") === "en"), "doc_id", "text", 0.5)
-        .select(col("doc_id"), col("avg_logprob").as("lp_target"))
-      val underCorpus = graft.ops.TextIndex.bigramLogProbScore(
-          d, "doc_id", "text", 0.5)
-        .select(col("doc_id"), col("avg_logprob").as("lp_corpus"))
-      underTarget.join(underCorpus, Seq("doc_id"))
-        .select(col("doc_id"), col("lp_target"), col("lp_corpus"),
-          (floor((col("lp_target") - col("lp_corpus")) * lit(1e6) + lit(0.5))
-            / lit(1e6)).as("importance"))
-        .orderBy(col("importance").desc, col("doc_id").asc)
-    }),
-    "x23_minhash_lsh_inrow" -> ((s, dir) => {
-      Dedup.minHashLsh(t(s, dir, "documents"), "doc_id", "text",
-          n = 3, numHashes = 64, bands = 16, verifyThreshold = 0.8,
-          pairJoin = false)
-        .orderBy(col("id_a"), col("id_b"))
-    }),
-    "x22_jaccard_inrow" -> ((s, dir) => {
-      Dedup.jaccardPairs(t(s, dir, "documents"), "doc_id", "text",
-          n = 3, threshold = 0.8, pairJoin = false)
-        .orderBy(col("id_a"), col("id_b"))
-    }),
-    "x74_neardup_fixed" -> ((s, dir) => {
-      Similarity.nearDupPairs(t(s, dir, "embeddings"), "vec_id", "embedding",
-          threshold = 0.35, planes = 4, tables = 2, dim = 64)
-        .orderBy(col("id_a"), col("id_b"))
-    }),
-    // d22 with the 100 TB mitigation OFF: every boilerplate shingle keeps
-    // its full k² pair fan-out — the exact form, measured against the
-    // capped driver default
-    "x25_jaccard_uncapped" -> ((s, dir) => {
-      Dedup.jaccardPairs(t(s, dir, "documents"), "doc_id", "text",
-          n = 3, threshold = 0.8, maxShingleDf = 0)
-        .orderBy(col("id_a"), col("id_b"))
-    }),
-    // p92 with planes pinned at 4: the fixed-knob semantic-dedup
-    // alternative, for head-to-head stress against the shipped auto form
-    "x92_semantic_dedup_fixed" -> ((s, dir) => {
-      val e = t(s, dir, "embeddings")
-      val pairs = Similarity.nearDupPairs(e, "vec_id", "embedding",
-          threshold = 0.35, planes = 4, tables = 2, dim = 64)
-        .select(col("id_a"), col("id_b"))
-      val cc = Dedup.connectedComponents(pairs, "id_a", "id_b")
-      val sizes = cc.groupBy(col("component")).agg(count(lit(1)).as("cluster_size"))
-      e.select(col("vec_id"))
-        .join(cc.select(col("node").as("vec_id"), col("component")), Seq("vec_id"), "left")
-        .join(sizes, Seq("component"), "left")
-        .select(col("vec_id"),
-          coalesce(col("component"), col("vec_id")).as("cluster_id"),
-          coalesce(col("cluster_size"), lit(1L)).as("cluster_size"),
-          when(col("component").isNull || col("component") === col("vec_id"), 1L)
-            .otherwise(0L).as("keep"))
-        .orderBy(col("vec_id"))
-    }),
     // end-to-end 64-merge BPE training (batched top-k merge extraction +
     // per-round vocab pruning); returns the ordered merge table
     "x97_bpe_train64" -> ((s, dir) => {

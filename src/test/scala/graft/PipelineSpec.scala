@@ -52,17 +52,46 @@ class PipelineSpec extends SparkSpec {
     assert(sw.length == 1 && sw.head.getDouble(2) == 1.0)
   }
 
-  test("jaccardPairs: streamed join shape ≡ in-row shape (sf0.001, with and without df cap)") {
+  test("jaccardPairs ≡ plain-Scala reference (sf0.001; df caps 0, 5, boundary)") {
     val d = core.Tables.documents(spark, sf("sf0.001"))
-    def pairs(join: Boolean, cap: Long) =
-      Dedup.jaccardPairs(d, "doc_id", "text", 3, 0.5, maxShingleDf = cap, pairJoin = join)
+    val sets = d.select(col("doc_id"),
+        array_distinct(TextFunctions.shingles(col("text"), 3)))
+      .as[(Long, Option[Seq[String]])].collect()
+      .map { case (id, sh) => id -> sh.getOrElse(Nil).toSet }
+      .filter(_._2.nonEmpty).sortBy(_._1)
+    assert(sets.map(_._1).distinct.length == sets.length, "doc ids must be unique")
+    val df = sets.flatMap(_._2).groupBy(identity).view.mapValues(_.length).toMap
+    // per co-occurring pair: both set sizes and the df of every shared shingle
+    val shared = for {
+      ((a, sa), i) <- sets.zipWithIndex.toSeq
+      (b, sb) <- sets.drop(i + 1).toSeq
+      common = sa.intersect(sb)
+      if common.nonEmpty
+    } yield (a, b, sa.size, sb.size, common.toSeq.map(df))
+    // the df cap thins the numerator only; denominators stay exact set sizes
+    def reference(cap: Long): Set[(Long, Long, Double)] =
+      shared.flatMap { case (a, b, na, nb, dfs) =>
+        val inter = dfs.count(f => cap <= 0 || f <= cap)
+        val j = inter.toDouble / (na + nb - inter)
+        if (inter > 0 && j >= 0.5)
+          Some((a, b, BigDecimal(j).setScale(4, BigDecimal.RoundingMode.HALF_UP).toDouble))
+        else None
+      }.toSet
+    def pairs(cap: Long) =
+      Dedup.jaccardPairs(d, "doc_id", "text", 3, 0.5, maxShingleDf = cap)
         .select("id_a", "id_b", "jaccard").as[(Long, Long, Double)].collect().toSet
-    val joinShape = pairs(join = true, cap = 0)
-    assert(joinShape.nonEmpty)
-    assert(joinShape == pairs(join = false, cap = 0))
-    // under a shingle-df cap, both shapes drop the same hot shingles from the
-    // numerator while keeping exact denominators
-    assert(pairs(join = true, cap = 5) == pairs(join = false, cap = 5))
+    val uncapped = reference(0)
+    assert(uncapped.nonEmpty)
+    assert(pairs(0) == uncapped)
+    assert(pairs(5) == reference(5))
+    // the cap boundary: the largest cap whose answer differs from one
+    // below it. At `cap` a shingle with df == cap is kept; at `cap - 1` the
+    // same shingle sits at cap + 1 and is dropped
+    val cap = (df.values.max.toLong to 2L by -1L)
+      .find(c => reference(c) != reference(c - 1))
+      .getOrElse(fail("no df value changes the sf0.001 answer"))
+    assert(pairs(cap) == reference(cap))
+    assert(pairs(cap - 1) == reference(cap - 1))
   }
 
   test("jaccardPairs: degenerate boilerplate shingle — bounded join shape, no collected lists") {
@@ -91,19 +120,20 @@ class PipelineSpec extends SparkSpec {
       .select("id_a", "id_b").as[(Long, Long)].collect().toSet
     assert(lsh == exact)
     assert(exact.nonEmpty) // the corpus has planted near-dups
-    // the codegen'd equi-join candidate shape (first-collision-band unique
-    // emission) must produce the identical verified pair set — it is the
-    // same banding, only the pair-expansion strategy differs
-    val joined = Dedup.minHashLsh(d, "doc_id", "text", 3, 64, 16,
-        verifyThreshold = 0.8, pairJoin = true)
-      .select("id_a", "id_b").as[(Long, Long)].collect().toSet
-    assert(joined == exact)
-    // and the UNVERIFIED candidate sets match too (the emission rule itself)
-    val candInRow = Dedup.minHashLsh(d, "doc_id", "text", 3, 64, 16)
-      .as[(Long, Long)].collect().toSet
-    val candJoin = Dedup.minHashLsh(d, "doc_id", "text", 3, 64, 16, pairJoin = true)
-      .as[(Long, Long)].collect().toSet
-    assert(candJoin == candInRow)
+    // the UNVERIFIED candidate set is exactly the pairs that share any
+    // (band, bsig) bucket: first-collision-band emission loses none and
+    // emits each once
+    val sigs = Dedup.bandSignatures(d, "doc_id", "text", 3, 64, 16)
+      .select("id", "bands").as[(Long, Seq[Long])].collect()
+    val bucketed = sigs.toSeq
+      .flatMap { case (id, bands) => bands.zipWithIndex.map { case (sig, b) => (b, sig) -> id } }
+      .groupBy(_._1).values.map(_.map(_._2).sorted)
+    val reference = bucketed.flatMap(ids =>
+      for ((a, i) <- ids.zipWithIndex; b <- ids.drop(i + 1) if a < b) yield (a, b)).toSet
+    val cand = Dedup.minHashLsh(d, "doc_id", "text", 3, 64, 16)
+      .as[(Long, Long)].collect()
+    assert(cand.length == cand.distinct.length)
+    assert(cand.toSet == reference)
   }
 
   test("minHashLsh: degenerate all-duplicates bucket — every pair once, no collected lists") {
@@ -132,7 +162,7 @@ class PipelineSpec extends SparkSpec {
     // otherwise the signature projection (the dominant per-row cost) runs
     // twice over the corpus
     val d = core.Tables.documents(spark, sf("sf0.001"))
-    val pairs = Dedup.minHashLsh(d, "doc_id", "text", 3, 64, 16, pairJoin = true)
+    val pairs = Dedup.minHashLsh(d, "doc_id", "text", 3, 64, 16)
     pairs.collect() // drive to the final adaptive plan
     val fin = pairs.queryExecution.executedPlan.toString
     assert(fin.contains("isFinalPlan=true"), fin)
@@ -1638,7 +1668,7 @@ class PipelineSpec extends SparkSpec {
     // ...and the registered readers' other magics all pass the gate
     assert(Multimodal.maybeImage(Array(0xff, 0xd8, 0xff, 0xe0).map(_.toByte))) // JPEG
     assert(Multimodal.maybeImage("GIF89a".getBytes("US-ASCII")))
-    assert(Multimodal.maybeImage("BM  ".getBytes("ISO-8859-1")))
+    assert(Multimodal.maybeImage("BM\u0000\u0000".getBytes("ISO-8859-1")))
     assert(Multimodal.maybeImage(Array[Byte](0x49, 0x49, 0x2a, 0x00)))  // TIFF LE
     assert(Multimodal.maybeImage(Array[Byte](0x4d, 0x4d, 0x00, 0x2a)))  // TIFF BE
     assert(Multimodal.maybeImage(Array[Byte](0x00, 0x00, 0x20, 0x20)))  // WBMP shape

@@ -733,7 +733,7 @@ class PropertySpec extends SparkSpec {
         Gen.const(Double.MaxValue), Gen.const(Double.MinPositiveValue)))
       f <- opt(Gen.choose(-1e9f, 1e9f))
       s <- opt(Gen.listOf(Gen.oneOf(Gen.alphaNumChar, Gen.const('é'), Gen.const('中'),
-        Gen.const('\n'), Gen.const(' '),
+        Gen.const('\n'), Gen.const('\u0000'),
         Gen.const(Character.toChars(0x1D11E)(0)))).map { cs =>
         // a lone high surrogate is not valid UTF-8-encodable text; pair it
         val str = cs.mkString
